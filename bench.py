@@ -413,7 +413,10 @@ def main() -> None:
         # was silently the 8-core scaling run, which shifted 30/38 plan
         # digests (shuffle-partition counts live in Exchange nodes) and
         # cost an adjudication (r15)
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0),
+        # unset SPARK_GRAFT_CPUS means local[*]: record the parallelism
+        # Spark actually used, so the overwrite guard below can compare
+        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0)
+        or spark.sparkContext.defaultParallelism,
         "n_runs": N_RUNS,
         "loadavg_at_start": round(load_at_start, 2),
         "loadavg_at_end": load_at_end,
@@ -452,9 +455,9 @@ def main() -> None:
     # Overwrite guard (r15, VERDICT r14 ask #3): bench.py used to clobber
     # BENCH_full.json unconditionally, so sf0.001 validation runs twice
     # shipped over the graded sf0.1 artifact mid-round. A run whose sf
-    # differs from the committed artifact's now lands in
-    # BENCH_full_sf{sf}.json instead; same-sf (or no existing artifact)
-    # overwrites as before.
+    # or core count differs from the committed artifact's now lands in
+    # BENCH_full_sf{sf}_c{cpus}.json instead; same-sf, same-cpus (or no
+    # existing artifact) overwrites as before.
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     full_path = os.path.join(repo_dir, "BENCH_full.json")
     try:

@@ -24,6 +24,14 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 # duration — they are the per-query correctness net the default tier
 # exists to provide.
 SLOW_TESTS = {
+    # crash-point matrix rows for stores that were already on
+    # fsutil.replace_dir; the parquet, SCD2, bucketed and changelog rows
+    # stay in the default tier
+    "tests/test_crash_matrix.py::test_crash_point_matrix[dedup_compact_index]",
+    "tests/test_crash_matrix.py::test_crash_point_matrix[ivf_build]",
+    "tests/test_crash_matrix.py::test_crash_point_matrix[layout_recluster]",
+    "tests/test_crash_matrix.py::test_crash_point_matrix[packed_shard_append]",
+    "tests/test_crash_matrix.py::test_crash_point_matrix[sketch_compact_store]",
     "tests/test_diff_properties.py::test_diff_broadcast_path_matches_model",
     "tests/test_diff_properties.py::test_diff_incremental_path_matches_model",
     "tests/test_diff_properties.py::test_diff_matches_reference_model",

@@ -1067,9 +1067,9 @@ def test_recluster_recovers_append_degraded_pruning(spark, tmp_path):
     assert files_touched(got.filter(pred)) <= 2
     assert got.filter(pred).count() == 200 + 80 * 4
     # no backup/tmp residue from the crash-safe swap
-    from wwwision_importservice_spark.fsutil import path_exists
+    from wwwision_importservice_spark.fsutil import _backup_path, path_exists
 
-    assert not path_exists(spark, path + "__replaced")
+    assert not path_exists(spark, _backup_path(path))
     assert not path_exists(spark, path + "__reclustering")
 
 

@@ -1,4 +1,5 @@
-"""Tiny Hadoop-filesystem helpers shared by operators and streaming.
+"""Hadoop-filesystem helpers: the only code that touches the namespace of
+a persisted state directory (sinks, the changelog, operators, streaming).
 
 The recurring need: "read this parquet state directory, or start fresh
 iff it has never been written". A bare ``try/except Exception`` around
@@ -12,6 +13,8 @@ pipeline run) retries.
 """
 
 from __future__ import annotations
+
+import logging
 
 from pyspark.sql import SparkSession
 
@@ -41,14 +44,16 @@ def list_data_files(spark: SparkSession, path: str) -> list[str]:
     return out
 
 
+def content_bytes(spark: SparkSession, path: str) -> int:
+    """Total bytes of the files under ``path`` (``getContentSummary``)."""
+    fs, p = _fs_and_path(spark, path)
+    return int(fs.getContentSummary(p).getLength())
+
+
 def list_child_dirs(spark: SparkSession, path: str) -> list[str]:
-    """Immediate child directory NAMES under ``path`` (no recursion, no
-    data reads) — the cheap namespace probe the incremental shard
-    append uses to detect crash windows: a ``batch_id=N`` directory
-    present in data that the manifest's watermark hasn't covered means
-    a prior append crashed between its data write and its manifest
-    swap. One ``listStatus`` call; cost is proportional to the child
-    COUNT (number of batches), never to data size."""
+    """Immediate child directory NAMES under ``path``: one ``listStatus``
+    call, cost ∝ child count, never data size (changelog run discovery,
+    bucketed generations, the shard append's crash-window probe)."""
     fs, p = _fs_and_path(spark, path)
     if not fs.exists(p):
         return []
@@ -59,69 +64,82 @@ def list_child_dirs(spark: SparkSession, path: str) -> list[str]:
     ]
 
 
+_BACKUP_SUFFIX = "__replaced"
+
+
 def _backup_path(dst: str) -> str:
-    return dst.rstrip("/") + "__replaced"
+    # a dot-prefixed sibling: invisible to Spark's partition discovery
+    # and to prefix scans (``run_id=``, ``batch_id=``) over the parent
+    head, sep, name = dst.rstrip("/").rpartition("/")
+    return f"{head}{sep}.{name}{_BACKUP_SUFFIX}"
 
 
 def replace_dir(spark: SparkSession, src: str, dst: str) -> None:
-    """Replace directory ``dst`` with ``src`` via a backup-rename swap.
+    """Replace directory ``dst`` with ``src`` via a backup-rename swap:
+    rename ``dst`` to its backup ``<parent>/.<name>__replaced``, rename
+    ``src`` into place (the commit point), then delete the backup.
 
-    The naive delete-then-rename has a crash window in which ``dst`` is
-    simply GONE: a stateful caller's "does my state dir exist?" probe
-    then reads "never written" and silently resets state (for the
-    near-dup gate that means admitting a whole batch of duplicates).
-    Here ``dst`` is first RENAMED to a sibling ``<dst>__replaced``
-    backup, ``src`` renamed into place, and only then the backup
-    deleted — at every intermediate point the prior state survives
-    under one of the two names, and :func:`recover_dir` restores it.
+    At every intermediate point the prior state survives under one of
+    the two names, and :func:`recover_dir` settles it, so ``dst`` never
+    reads as "never written" (which would make a stateful caller reset
+    its state). Raises iff ``dst`` still holds the old state: a failed
+    backup delete after the commit is logged, and the next
+    :func:`recover_dir` removes the leftover.
 
     Still NOT atomic on object stores (multiple namespace ops); callers
     must ensure no concurrent reader — e.g. compaction runs
     synchronously inside the same ``foreachBatch`` that owns the index
     directory, so micro-batch ordering provides the exclusion."""
+    recover_dir(spark, dst)
     fs, dst_p = _fs_and_path(spark, dst)
     _, src_p = _fs_and_path(spark, src)
     _, bak_p = _fs_and_path(spark, _backup_path(dst))
-    if fs.exists(bak_p):
-        if fs.exists(dst_p):
-            # leftover from an earlier COMPLETED swap (crash between the
-            # src->dst rename and the backup delete); dst is authoritative
-            fs.delete(bak_p, True)
-        else:
-            # crash window between the two renames of an earlier swap:
-            # the backup is the ONLY copy of the state — deleting it
-            # here would destroy it. Restore first, then swap normally.
-            if not fs.rename(bak_p, dst_p):
-                raise OSError(
-                    f"recovery rename {_backup_path(dst)} -> {dst} failed"
-                )
-    if fs.exists(dst_p):
-        if not fs.rename(dst_p, bak_p):
-            raise OSError(f"rename {dst} -> {_backup_path(dst)} failed")
+    had_dst = fs.exists(dst_p)
+    if had_dst and not fs.rename(dst_p, bak_p):
+        raise OSError(f"rename {dst} -> {_backup_path(dst)} failed")
     if not fs.rename(src_p, dst_p):
         # put the old state back so dst never reads as "never written"
-        if fs.exists(bak_p):
+        if had_dst:
             fs.rename(bak_p, dst_p)
         raise OSError(f"rename {src} -> {dst} failed")
-    if fs.exists(bak_p):
-        fs.delete(bak_p, True)
+    if had_dst:
+        try:
+            fs.delete(bak_p, True)
+        except Exception:  # committed; the next recover_dir removes it
+            logging.getLogger(__name__).warning(
+                "backup of %s not deleted", dst, exc_info=True)
 
 
 def recover_dir(spark: SparkSession, dst: str) -> bool:
-    """Restore ``dst`` from a :func:`replace_dir` backup interrupted
-    mid-swap: a present ``<dst>__replaced`` with ``dst`` missing is the
-    crash window between the two renames — the backup IS the state, so
-    rename it back. Returns True iff a restore happened. Stateful
-    readers (the near-dup gate's index probe) call this before their
-    existence check so an interrupted compaction reads as "prior state"
-    rather than "never written"."""
+    """Settle a :func:`replace_dir` swap interrupted mid-way. A backup
+    with ``dst`` missing is the window between the two renames: the
+    backup IS the state, so rename it back (returns True). A backup
+    beside ``dst`` is a committed swap that never deleted its backup:
+    ``dst`` is authoritative, so delete the backup. Every reader and
+    writer of a swapped directory calls this before its existence
+    check, so a crash reads as the old or the new state, never as
+    "never written"."""
     fs, dst_p = _fs_and_path(spark, dst)
     _, bak_p = _fs_and_path(spark, _backup_path(dst))
-    if fs.exists(bak_p) and not fs.exists(dst_p):
-        if not fs.rename(bak_p, dst_p):
-            raise OSError(f"recovery rename {_backup_path(dst)} -> {dst} failed")
-        return True
-    return False
+    if not fs.exists(bak_p):
+        return False
+    if fs.exists(dst_p):
+        if not fs.delete(bak_p, True):
+            raise OSError(f"delete {_backup_path(dst)} failed")
+        return False
+    if not fs.rename(bak_p, dst_p):
+        raise OSError(f"recovery rename {_backup_path(dst)} -> {dst} failed")
+    return True
+
+
+def recover_child_dirs(spark: SparkSession, parent: str) -> None:
+    """:func:`recover_dir` every child of ``parent`` that has a swap
+    backup — for readers that discover the children by listing, where
+    a child caught mid-swap exists only under its backup name."""
+    parent = parent.rstrip("/")
+    for name in list_child_dirs(spark, parent):
+        if name.startswith(".") and name.endswith(_BACKUP_SUFFIX):
+            recover_dir(spark, f"{parent}/{name[1:-len(_BACKUP_SUFFIX)]}")
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:

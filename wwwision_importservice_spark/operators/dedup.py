@@ -267,9 +267,11 @@ def compact_index(
     evicting them would silently re-open the corpus to their
     duplicates.
 
-    Not atomic: the rewrite lands in a sibling temp dir and replaces
-    the index with delete+rename (see ``fsutil.replace_dir``). The
-    streaming gate invokes it synchronously inside ``foreachBatch``
+    Crash-safe, not atomic: the rewrite lands in a sibling temp dir and
+    replaces the index with :func:`fsutil.replace_dir`'s backup-rename
+    swap, so after a crash the index reads (via ``recover_dir``) as the
+    old or the compacted generation, never as missing. The streaming
+    gate invokes it synchronously inside ``foreachBatch``
     (``compact_every``), so micro-batch ordering provides exclusion;
     any other caller must pause readers for the swap.
 
@@ -295,7 +297,7 @@ def compact_index(
     from wwwision_importservice_spark.fsutil import claim_writer, recover_dir
 
     # single-writer guard, same protocol as every other persisted-state
-    # writer (r11 review catch: the delete+rename swap below assumes
+    # writer (r11 review catch: the backup-rename swap below assumes
     # exclusion — compacting a dir a streaming gate has claimed must be
     # a loud error unless the caller proves ownership by passing that
     # gate's writer_id; claim_writer(None) raises on any claimed dir)

@@ -157,11 +157,9 @@ def pagerank_converged(
     ``max_iterations`` is hit.
 
     Returns ``(ranks, stats)`` with ``stats = {"iterations", "delta_u",
-    "converged"}``. Each step costs one extra join + 1-row aggregate
-    for the delta — the per-iteration delta collect is ONE scalar
-    (metadata-scale, and the iteration is already eager through its
-    localCheckpoint, so the collect adds no extra pass over the
-    lineage). Integer arithmetic makes the trajectory — and therefore
+    "converged"}``. The step carries the input rank, so the L1 delta is
+    an ``observe()`` metric on the step's ``localCheckpoint`` action:
+    convergence tracking adds zero jobs per iteration. Integer arithmetic makes the trajectory — and therefore
     the stopping iteration — deterministic across runs and engines,
     unlike float PageRank where the stopping point can flap on
     accumulation order right at the threshold.
@@ -201,8 +199,7 @@ def pagerank_converged(
         # the step carries the input rank as _prev (left side of its
         # contribution join is the rank frame itself), so the L1 delta
         # rides the checkpoint action as an observe() metric — zero
-        # extra jobs and no per-iteration ranks-vs-next join (r15;
-        # previously one O(V) join + aggregate + collect per iteration)
+        # extra jobs and no per-iteration ranks-vs-next join
         obs_d = Observation()
         nxt = (
             _pagerank_step(

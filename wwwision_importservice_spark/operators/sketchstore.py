@@ -123,11 +123,10 @@ def append_batch(
     def below_watermark(kind: str) -> bool:
         # restore an interrupted compaction swap BEFORE probing or
         # writing: appending into a mid-swap-missing kind dir would
-        # re-create it, recover_dir would then no-op (both names
-        # exist), and the next compaction's 'dst is authoritative'
-        # branch would delete the backup — the whole folded history
-        # (code-review finding; every stateful reader/writer recovers
-        # first, this writer included)
+        # re-create it, and recover_dir would then take the re-created
+        # dir as authoritative and delete the backup — the whole folded
+        # history (code-review finding; every stateful reader/writer
+        # recovers first, this writer included)
         recover_dir(spark, f"{store_dir}/{kind}")
         marker = read_text_file(
             spark, f"{store_dir}/{kind}/_compacted_through"

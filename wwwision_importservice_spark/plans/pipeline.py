@@ -21,6 +21,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wwwision_importservice_spark import fsutil
 from wwwision_importservice_spark.errors import ImportServiceError
 from wwwision_importservice_spark.operators.diff import (
     CHANGE_TYPE_COL,
@@ -63,26 +64,24 @@ def replay_changelog(
 
     ``runs=None`` discovers ``run_id=*`` directories and applies them in
     LEXICOGRAPHIC order — use sortable run ids (zero-padded sequence
-    numbers or ISO timestamps) or pass the order explicitly. Staging and
-    parked directories (``.staging_*`` / ``.prev_*``) are never replayed
-    — only committed runs exist under ``run_id=``.
+    numbers or ISO timestamps) or pass the order explicitly. Run
+    directories commit through :func:`fsutil.replace_dir`, so a re-commit
+    interrupted mid-swap is restored before discovery; staging dirs and
+    swap backups are dot-prefixed and never replayed.
     """
+    base = changelog_dir.rstrip("/")
+    if not fsutil.path_exists(spark, base):
+        raise ImportServiceError(
+            f'Changelog directory "{changelog_dir}" does not exist'
+        )
+    fsutil.recover_child_dirs(spark, base)
     if runs is None:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(changelog_dir)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
-            raise ImportServiceError(
-                f'Changelog directory "{changelog_dir}" does not exist'
-            )
-        names = [
-            s.getPath().getName() for s in fs.listStatus(hpath)
-        ]
         runs = sorted(
-            n.split("=", 1)[1] for n in names if n.startswith("run_id=")
+            n.split("=", 1)[1]
+            for n in fsutil.list_child_dirs(spark, base)
+            if n.startswith("run_id=")
         )
     totals = {"added": 0, "updated": 0, "removed": 0, "errors": 0, "runs": 0}
-    base = changelog_dir.rstrip("/")
     for run in runs:
         cdc = spark.read.parquet(f"{base}/run_id={run}")
         stats = target.apply(spark, cdc)
@@ -212,17 +211,20 @@ class ImportPipeline:
         partitioned by change_type — the audit/incremental-consumer feed
         (Delta CDF shape) downstream jobs read instead of re-diffing.
 
-        Changelog consistency contract: the CDC frame is STAGED to a
-        hidden sibling directory before ``target.apply`` (it must be
+        Changelog consistency contract: the changelog is write-ahead. The
+        CDC frame is staged to a hidden sibling directory (it must be
         materialized pre-apply — its lineage reads the target's current
-        state, which apply rewrites) and COMMITTED to ``run_id=<id>/``
-        by a filesystem rename only after apply succeeds. A failed sync
-        leaves no changelog entries to replay-diverge from the primary,
-        and re-running a run id replaces its directory — idempotent,
-        never append-duplicating CDC rows. Records quarantined by the
-        sink (``ApplyStats.errors``) still appear in the changelog: it
-        documents the computed change set, not per-record sink
-        outcomes."""
+        state, which apply rewrites) and committed to ``run_id=<id>/``
+        with :func:`fsutil.replace_dir` BEFORE ``target.apply``. If apply
+        raises, the run directory is deleted, so a failed sync leaves no
+        changelog entry to replay-diverge from the primary. A crash
+        during apply can leave the entry ahead of the target; re-running
+        the run id over the same source recomputes the same change set
+        and converges. Re-running a run id replaces its directory
+        — idempotent, never append-duplicating CDC rows. Records
+        quarantined by the sink (``ApplyStats.errors``) still appear in
+        the changelog: it documents the computed change set, not
+        per-record sink outcomes."""
         cdc = self.compute_changes(force_updates).cache()
         try:
             self._dispatch(Events.PRE_IMPORT_DATA, cdc)
@@ -256,33 +258,12 @@ class ImportPipeline:
 
             mapped = self._apply_mapping(cdc)
 
-            # stage the changelog BEFORE apply (see docstring contract)
-            staging = run_dir = None
+            # write-ahead changelog: commit BEFORE apply (see docstring)
+            run_dir = None
             if changelog_dir is not None:
-                base = changelog_dir.rstrip("/")
-                sub = f"run_id={run_id}" if run_id else "run_id=unlabeled"
-                run_dir = f"{base}/{sub}"
-                staging = f"{base}/.staging_{sub}"
-                if sum(counts.values()):
-                    (
-                        mapped.write.partitionBy(CHANGE_TYPE_COL)
-                        .mode("overwrite")
-                        .parquet(staging)
-                    )
-                else:
-                    # an all-noop run writes an EMPTY frame: partitionBy
-                    # would emit no part files (directory unreadable —
-                    # no schema to infer). Write the empty frame into an
-                    # explicit hive-style partition dir instead, so the
-                    # leaf-file DEPTH stays uniform with partitioned
-                    # runs and a consumer reading the changelog ROOT
-                    # (partition discovery over run_id=/change_type=)
-                    # never sees conflicting directory structures.
-                    (
-                        mapped.drop(CHANGE_TYPE_COL)
-                        .write.mode("overwrite")
-                        .parquet(f"{staging}/{CHANGE_TYPE_COL}=__none__")
-                    )
+                run_dir = self._commit_changelog(
+                    mapped, not sum(counts.values()), changelog_dir, run_id
+                )
 
             if added:
                 self._dispatch(Events.PRE_ADD_DATA, added)
@@ -294,13 +275,9 @@ class ImportPipeline:
             try:
                 stats = self.preset.target.apply(self.spark, mapped)
             except BaseException:
-                if staging is not None:
-                    self._fs_delete(staging)
+                if run_dir is not None:
+                    fsutil.delete_dir(self.spark, run_dir)
                 raise
-
-            # commit: rename staging -> run_id dir (replace on re-run)
-            if staging is not None:
-                self._fs_commit(staging, run_dir)
 
             if stats.errors:
                 self._dispatch(
@@ -324,51 +301,42 @@ class ImportPipeline:
         finally:
             cdc.unpersist()
 
-    # -- changelog staging commit (Hadoop FS — any scheme Spark writes) -- #
-    def _hadoop_fs(self, path: str):
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        return hpath.getFileSystem(self.spark._jsc.hadoopConfiguration()), hpath
-
-    def _fs_delete(self, path: str) -> None:
-        fs, hpath = self._hadoop_fs(path)
-        if fs.exists(hpath):
-            fs.delete(hpath, True)
-
-    def _fs_commit(self, staging: str, final: str) -> None:
-        """Promote the staged run directory via a rename shuffle that
-        never deletes data before its replacement is in place: any
-        previous run dir is first RENAMED aside (to a dot-prefixed
-        sibling, hidden from partition discovery), then staging renames
-        into the final name, then the parked previous dir is deleted. A
-        crash between the renames leaves the run dir briefly absent but
-        BOTH generations intact on disk (the next run's commit clears
-        the parked dir) — strictly better than the delete-then-rename
-        window, where a crash destroyed the previous entries with the
-        new ones stranded in staging. Renames are atomic on HDFS/local;
-        on object stores they degrade to copy+delete — the standard
-        job-commit trade-off, acceptable because each run_id directory
-        is single-writer."""
-        base, name = final.rsplit("/", 1)
-        parked = f"{base}/.prev_{name}"
-        fs, final_p = self._hadoop_fs(final)
-        _, staging_p = self._hadoop_fs(staging)
-        _, parked_p = self._hadoop_fs(parked)
-        if fs.exists(parked_p):
-            fs.delete(parked_p, True)
-        had_prev = fs.exists(final_p)
-        if had_prev and not fs.rename(final_p, parked_p):
-            raise ImportServiceError(
-                f"Failed to park previous changelog {final}"
-            )
-        if not fs.rename(staging_p, final_p):
-            if had_prev:
-                fs.rename(parked_p, final_p)  # restore the previous run
-            raise ImportServiceError(
-                f"Failed to commit changelog {staging} -> {final}"
-            )
-        if had_prev:
-            fs.delete(parked_p, True)
+    def _commit_changelog(
+        self, mapped: DataFrame, empty: bool, changelog_dir: str,
+        run_id: str | None,
+    ) -> str:
+        """Stage the CDC frame in a hidden sibling and commit it to its
+        ``run_id=`` directory with :func:`fsutil.replace_dir`; returns
+        the run directory."""
+        base = changelog_dir.rstrip("/")
+        sub = f"run_id={run_id}" if run_id else "run_id=unlabeled"
+        run_dir, staging = f"{base}/{sub}", f"{base}/.staging_{sub}"
+        try:
+            if not empty:
+                (
+                    mapped.write.partitionBy(CHANGE_TYPE_COL)
+                    .mode("overwrite")
+                    .parquet(staging)
+                )
+            else:
+                # an all-noop run writes an EMPTY frame: partitionBy
+                # would emit no part files (directory unreadable — no
+                # schema to infer). Write the empty frame into an
+                # explicit hive-style partition dir instead, so the
+                # leaf-file DEPTH stays uniform with partitioned runs
+                # and a consumer reading the changelog ROOT (partition
+                # discovery over run_id=/change_type=) never sees
+                # conflicting directory structures.
+                (
+                    mapped.drop(CHANGE_TYPE_COL)
+                    .write.mode("overwrite")
+                    .parquet(f"{staging}/{CHANGE_TYPE_COL}=__none__")
+                )
+            fsutil.replace_dir(self.spark, staging, run_dir)
+        except BaseException:
+            fsutil.delete_dir(self.spark, staging)
+            raise
+        return run_dir
 
     def _apply_mapping(self, cdc: DataFrame) -> DataFrame:
         """K11 at the set level: map attribute columns, carry engine columns."""

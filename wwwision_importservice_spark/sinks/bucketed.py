@@ -12,10 +12,11 @@ reference reading its SQL table through an indexed key
 (``Classes/DataTarget/Dbal/DbalTarget.php:118-128``).
 
 Snapshot swap: Spark cannot overwrite a bucketed table it is reading,
-so each apply writes a NEW generation directory, repoints the catalog
-table, and deletes older generations — the same staging-then-swap
-pattern as ParquetTarget, expressed through the catalog because bucket
-metadata lives there.
+so each apply writes a NEW generation directory ``<path>.g<N>``,
+repoints the catalog table at it, and then deletes the older
+generations. Bucket metadata lives in the catalog, so this target does
+not use ``fsutil.replace_dir``; its commit point is the generation's
+``_SUCCESS`` marker, and the deletes after it are best-effort.
 
 Durability: COMMITTED generation directories (those carrying Spark's
 ``_SUCCESS`` job-commit marker) are the source of truth; the catalog
@@ -46,15 +47,18 @@ directory.
 
 from __future__ import annotations
 
+import logging
 import os
 import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from wwwision_importservice_spark import fsutil
 from wwwision_importservice_spark.plans.result import Result
 from wwwision_importservice_spark.plans.schema import OptionsSchema
 from wwwision_importservice_spark.sinks.parquet import ParquetTarget
+
+log = logging.getLogger(__name__)
 
 
 class BucketedParquetTarget(ParquetTarget):
@@ -96,17 +100,25 @@ class BucketedParquetTarget(ParquetTarget):
 
     # ------------------------------------------------------------------ #
     def _generations(self) -> list[str]:
-        parent = os.path.dirname(self.path.rstrip("/")) or "."
-        base = os.path.basename(self.path.rstrip("/"))
+        parent, base = os.path.split(self.path.rstrip("/"))
+        parent = parent or "."
         pat = re.compile(re.escape(base) + r"\.g(\d+)$")
-        if not os.path.isdir(parent):
-            return []
         found = [
-            (int(m.group(1)), os.path.join(parent, d))
-            for d in os.listdir(parent)
+            (int(m.group(1)), f"{parent}/{d}")
+            for d in fsutil.list_child_dirs(SparkSession.active(), parent)
             if (m := pat.match(d))
         ]
         return [p for _, p in sorted(found)]
+
+    @staticmethod
+    def _drop_generations(spark: SparkSession, gens: list[str]) -> None:
+        # best-effort: the apply already committed, so a failed delete
+        # only leaves a directory for the next apply's cleanup
+        for g in gens:
+            try:
+                fsutil.delete_dir(spark, g)
+            except Exception:
+                log.warning("generation %s not deleted", g, exc_info=True)
 
     def _committed_generations(self) -> list[str]:
         """Generations whose write COMMITTED (Spark's _SUCCESS marker) —
@@ -121,13 +133,12 @@ class BucketedParquetTarget(ParquetTarget):
         as empty (which would turn the next sync into a full re-add).
         Mid-write crash detection is unavailable in that configuration."""
         gens = self._generations()
+        spark = SparkSession.active()
         committed = [
-            g for g in gens if os.path.exists(os.path.join(g, "_SUCCESS"))
+            g for g in gens if fsutil.path_exists(spark, f"{g}/_SUCCESS")
         ]
         if gens and not committed:
-            import logging
-
-            logging.getLogger(__name__).warning(
+            log.warning(
                 "BucketedParquetTarget %s: %d generation(s) but none "
                 "carries a _SUCCESS marker — success markers appear "
                 "disabled; serving the newest generation without "
@@ -187,16 +198,14 @@ class BucketedParquetTarget(ParquetTarget):
         # and rename staging into place, then clear older generations
         spark.sql(f"DROP TABLE IF EXISTS {self.table_name}")
         spark.sql(f"ALTER TABLE {staging} RENAME TO {self.table_name}")
-        for old in gens:
-            shutil.rmtree(old, ignore_errors=True)
+        self._drop_generations(spark, gens)
 
     def remove_all(self, spark: SparkSession) -> int:
         existing = self.read(spark)
         count = existing.count() if existing is not None else 0
         spark.sql(f"DROP TABLE IF EXISTS {self.table_name}")
         spark.sql(f"DROP TABLE IF EXISTS {self.table_name}__staging")
-        for old in self._generations():
-            shutil.rmtree(old, ignore_errors=True)
+        self._drop_generations(spark, self._generations())
         return count
 
     def compact(
@@ -230,15 +239,12 @@ class BucketedParquetTarget(ParquetTarget):
         self._write_snapshot(
             existing.repartition(self.n_buckets, bucket_id)
         )
-        newest = self._generations()[-1]
-        return sum(
-            1 for e in os.scandir(newest) if e.name.endswith(".parquet")
-        )
+        return len(fsutil.list_data_files(spark, self._generations()[-1]))
 
     def setup(self, spark: SparkSession) -> Result:
         result = Result()
         parent = os.path.dirname(self.path.rstrip("/")) or "."
-        if not os.path.isdir(parent):
+        if not fsutil.path_exists(spark, parent):
             result.add_error(f'Parent directory "{parent}" does not exist')
         elif spark.catalog.tableExists(self.table_name):
             result.add_notice(

@@ -3,8 +3,11 @@
 No reference counterpart (the reference writes to SQL tables / CR nodes);
 this is the idiomatic Spark sink for file-based targets: the new table
 state is computed as anti-join + union (the classic MERGE emulation when
-no Delta/Iceberg jars are available) and written as a fresh snapshot,
-then atomically swapped in.
+no Delta/Iceberg jars are available), written as a fresh snapshot and
+committed with :func:`fsutil.replace_dir`'s backup-rename swap. Readers
+call :func:`fsutil.recover_dir` first, so after a crash the target reads
+as the old or the new snapshot, never as "never written" (which would
+make the next diff report every record as added).
 
 Semantics parity:
 - hard delete drops removed rows (W3);
@@ -23,12 +26,11 @@ the writer for ``DeltaTable.merge`` is localized here.
 from __future__ import annotations
 
 import os
-import shutil
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wwwision_importservice_spark import fsutil
 from wwwision_importservice_spark.operators.diff import CHANGE_TYPE_COL, ChangeType
 from wwwision_importservice_spark.plans.result import Result
 from wwwision_importservice_spark.plans.schema import OptionsSchema
@@ -37,15 +39,23 @@ from wwwision_importservice_spark.sinks.base import ApplyStats, DataTarget
 
 
 def swap_snapshot(df: DataFrame, path: str) -> None:
-    """Write ``df`` to a sibling staging dir, then swap it in (rmtree +
-    rename). THE one copy of the snapshot-commit discipline — shared by
-    every snapshot-rewriting sink so a change to the crash-window
-    semantics cannot silently miss one of them."""
+    """Write ``df`` to the sibling staging dir ``<path>.staging`` (any
+    leftover from a crashed run is deleted first), then commit it with
+    :func:`fsutil.replace_dir`. Shared by every snapshot-rewriting sink,
+    so each one keeps the crash invariant: ``path`` reads as the old or
+    the new snapshot."""
+    spark = df.sparkSession
     staging = path.rstrip("/") + ".staging"
-    df.write.mode("overwrite").parquet(staging)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(staging, path)
+    fsutil.delete_dir(spark, staging)
+    df.write.parquet(staging)
+    fsutil.replace_dir(spark, staging, path)
+
+
+def snapshot_exists(spark: SparkSession, path: str) -> bool:
+    """Settle an interrupted swap, then probe: the existence check every
+    snapshot reader goes through."""
+    fsutil.recover_dir(spark, path)
+    return fsutil.path_exists(spark, path)
 
 
 class ParquetTarget(DataTarget):
@@ -80,10 +90,10 @@ class ParquetTarget(DataTarget):
 
     # ------------------------------------------------------------------ #
     def exists(self) -> bool:
-        return os.path.exists(self.path)
+        return snapshot_exists(SparkSession.active(), self.path)
 
     def read(self, spark: SparkSession) -> DataFrame | None:
-        if not self.exists():
+        if not snapshot_exists(spark, self.path):
             return None
         return spark.read.parquet(self.path)
 
@@ -197,8 +207,7 @@ class ParquetTarget(DataTarget):
     def remove_all(self, spark: SparkSession) -> int:
         existing = self.read(spark)
         count = existing.count() if existing is not None else 0
-        if self.exists():
-            shutil.rmtree(self.path)
+        fsutil.delete_dir(spark, self.path)
         return count
 
     def compact(
@@ -220,25 +229,19 @@ class ParquetTarget(DataTarget):
         existing = self.read(spark)
         if existing is None:
             return 0
-        total_bytes = sum(
-            e.stat().st_size
-            for e in os.scandir(self.path)
-            if e.name.endswith(".parquet")
-        )
+        total_bytes = fsutil.content_bytes(spark, self.path)
         n_files = max(1, -(-total_bytes // target_file_bytes))  # ceil
         self._write_snapshot(
             existing.repartitionByRange(n_files, F.col(self.id_column))
         )
-        return sum(
-            1 for e in os.scandir(self.path) if e.name.endswith(".parquet")
-        )
+        return len(fsutil.list_data_files(spark, self.path))
 
     def setup(self, spark: SparkSession) -> Result:
         result = Result()
         parent = os.path.dirname(self.path.rstrip("/")) or "."
-        if not os.path.isdir(parent):
+        if not fsutil.path_exists(spark, parent):
             result.add_error(f'Parent directory "{parent}" does not exist')
-        elif self.exists():
+        elif snapshot_exists(spark, self.path):
             result.add_notice(f'Target table "{self.path}" exists')
         else:
             result.add_notice(f'Target table "{self.path}" will be created on first run')

@@ -48,12 +48,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wwwision_importservice_spark import fsutil
 from wwwision_importservice_spark.operators.diff import CHANGE_TYPE_COL, ChangeType
 from wwwision_importservice_spark.plans.result import Result
 from wwwision_importservice_spark.plans.schema import OptionsSchema
 from wwwision_importservice_spark.record import ID_COL, VERSION_COL
 from wwwision_importservice_spark.sinks.base import ApplyStats, DataTarget
-from wwwision_importservice_spark.sinks.parquet import swap_snapshot
+from wwwision_importservice_spark.sinks.parquet import snapshot_exists, swap_snapshot
 
 VALID_FROM_COL = "valid_from"
 VALID_TO_COL = "valid_to"
@@ -86,10 +87,10 @@ class Scd2ParquetTarget(DataTarget):
 
     # ------------------------------------------------------------------ #
     def exists(self) -> bool:
-        return os.path.exists(self.path)
+        return snapshot_exists(SparkSession.active(), self.path)
 
     def read(self, spark: SparkSession) -> DataFrame | None:
-        if not self.exists():
+        if not snapshot_exists(spark, self.path):
             return None
         return spark.read.parquet(self.path)
 
@@ -261,9 +262,9 @@ class Scd2ParquetTarget(DataTarget):
     def setup(self, spark: SparkSession) -> Result:
         result = Result()
         parent = os.path.dirname(self.path.rstrip("/")) or "."
-        if not os.path.isdir(parent):
+        if not fsutil.path_exists(spark, parent):
             result.add_error(f'Parent directory "{parent}" does not exist')
-        elif self.exists():
+        elif snapshot_exists(spark, self.path):
             result.add_notice(f'SCD2 target "{self.path}" exists')
         else:
             result.add_notice(

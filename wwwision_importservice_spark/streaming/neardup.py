@@ -99,7 +99,7 @@ def near_dup_gate(
     — append-forever accretes one file set per micro-batch, and after
     thousands of batches the index scan pays a footer-open per tiny
     file. Compaction runs synchronously inside the batch (after the
-    append), so no concurrent reader sees the delete+rename swap.
+    append), so no concurrent reader sees the backup-rename swap.
     Admit/drop decisions are unchanged by compaction (pinned in
     tests). ``ttl_batches`` additionally evicts index entries older
     than that many batches — an explicit policy choice (an evicted
